@@ -110,7 +110,7 @@ object Soak {
   /** Build a pipeline tree holding a control file with `nNew` new and
     * `nUpd` updated documents (cache files seeded for the latter).
     */
-  private def buildTree(nNew: Int, nUpd: Int): Path = {
+  private[graft] def buildTree(nNew: Int, nUpd: Int): Path = {
     val tmp = Files.createTempDirectory("graft-soak")
     val inputDir = tmp.resolve("pipeline/input/soak-run")
     Files.createDirectories(inputDir)
@@ -125,7 +125,7 @@ object Soak {
     tmp
   }
 
-  private def deleteTree(tmp: Path): Unit = {
+  private[graft] def deleteTree(tmp: Path): Unit = {
     import scala.jdk.CollectionConverters._
     Files.walk(tmp).iterator().asScala.toSeq.reverse
       .foreach(p => Files.deleteIfExists(p))

@@ -15,6 +15,11 @@ import java.util.Locale
   * tests and this container use the deterministic [[StubConverter]]. A
   * production deployment supplies an adapter wrapping `soffice` /
   * Chromium / PDFBox on the executor image (reference `Dockerfile:3-6`).
+  *
+  * Calls can run from several threads at once: a task runs one conversion
+  * at a time, but from whichever of its I/O threads holds the document,
+  * and the tasks of an executor convert concurrently. Implementations
+  * must keep no unsynchronized shared mutable state.
   */
 trait Converter extends Serializable {
   /** DOC/DOCX bytes → PDF bytes (reference `convert_doc_to_pdf`). */
@@ -63,7 +68,8 @@ object Converter {
   * (reference `Dockerfile:3-6` installs libreoffice + playwright deps);
   * [[ProcessConverter.available]] probes for them, and [[IngestMain]]
   * falls back to [[StubConverter]] when absent — which keeps this
-  * container's tests hermetic (zero egress, no office suite).
+  * container's tests hermetic (zero egress, no office suite). Thread-safe:
+  * it keeps no state, and every call works in its own temp directory.
   */
 class ProcessConverter(
     sofficeBin: String = "soffice",
@@ -133,7 +139,7 @@ object ProcessConverter {
 /** Deterministic stand-in converter: produces valid-looking, stable PDF
   * bytes derived from the input so content hashes are reproducible.
   * Clearly a STUB — the real adapters shell out to soffice/Chromium
-  * ([[ProcessConverter]]).
+  * ([[ProcessConverter]]). Thread-safe: it keeps no state.
   */
 class StubConverter extends Converter {
 

@@ -24,6 +24,10 @@ class HttpStatusError(val status: Int, url: String)
 /** Effectful document fetcher — deliberately an interface so tests inject a
   * deterministic fake and executors construct one real client per partition
   * (SURVEY.md §2 S5: never inside Catalyst's expression space).
+  *
+  * Calls can run from several threads at once: a task shares its one
+  * instance among its in-flight documents ([[NewDocuments.InFlight]]), so
+  * implementations must be thread-safe.
   */
 trait Fetcher extends Serializable {
   /** GET with redirects; throws HttpStatusError / IOException on failure
@@ -61,7 +65,8 @@ object Fetcher {
   * timeout, browser-like headers, 4 attempts with random-exponential
   * backoff (reference `api_client.py:36-41,148-161`). One instance per
   * partition — connection reuse mirrors the per-task `requests.Session`
-  * (`new_document_actions.py:76`).
+  * (`new_document_actions.py:76`). Thread-safe: its only state is the
+  * lazily built `HttpClient`, which is itself safe for concurrent sends.
   */
 class JdkHttpFetcher(timeoutSeconds: Int = 30, attempts: Int = 4)
     extends Fetcher {

@@ -2,8 +2,9 @@ package graft.ingest
 
 import java.time.Instant
 
-import graft.model.Schemas.{BackendDocument, IngestResult, Update, UpdateConfig}
+import graft.model.Schemas.{IngestResult, Update, UpdateConfig}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, size}
 import org.apache.spark.storage.StorageLevel
 
 /** Two-phase ingest driver (SURVEY.md §2 O1–O5, §3.1).
@@ -11,9 +12,10 @@ import org.apache.spark.storage.StorageLevel
   * Phase 1 (updates) runs TO COMPLETION before phase 2 (new documents)
   * starts — the barrier is a correctness property (a new doc and an update
   * to the same id must not race, reference `main.py:164-229`). Each phase
-  * is a separate Spark action over an effectful partition stage; per-row
-  * failures become `IngestResult.error` strings and the job always
-  * completes (reference `main.py:184-196,221-227`; exit 0 asserted by
+  * is one Spark action over an effectful partition stage, and a phase
+  * with no rows launches no job; per-row failures become
+  * `IngestResult.error` strings and the job always completes (reference
+  * `main.py:184-196,221-227`; exit 0 asserted by
   * `test_integration.py:440,494`).
   */
 object IngestJob {
@@ -40,7 +42,6 @@ object IngestJob {
 
     val controlPath = s"${cfg.pipelineRoot}/$inputDirPath/$updatesFileName"
     val control = ControlFile.read(spark, controlPath)
-    control.persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- phase 1: updates ------------------------------------------
     val updates: Dataset[(String, Seq[Update])] =
@@ -76,13 +77,27 @@ object IngestJob {
         }
       }
     }
-    // the barrier: collect phase-1 results before phase 2 triggers
-    val updateReport = updateResults.collect().toSeq
 
-    // ---- phase 2: new documents ------------------------------------
-    val newReport = NewDocuments
-      .ingestBatch(control, cfg, fetcher, converter, runTs, conf)
-    control.unpersist()
+    // the phase Datasets above pick up the cache when their action runs
+    control.persist(StorageLevel.MEMORY_AND_DISK)
+    val (updateReport, newReport) = try {
+      // one cheap action over the persisted control row: a phase with no
+      // rows launches no job (an empty phase still costs a shuffle)
+      val sizes = control
+        .select(size(col("new_documents")), size(col("updated_documents")))
+        .collect()
+      def rows(i: Int): Int =
+        sizes.map(r => if (r.isNullAt(i)) 0 else math.max(0, r.getInt(i))).sum
+      // the barrier: collect phase-1 results before phase 2 triggers
+      val updateReport =
+        if (rows(1) == 0) Nil else updateResults.collect().toSeq
+
+      // ---- phase 2: new documents, one Spark action -------------------
+      val newReport =
+        if (rows(0) == 0) Nil
+        else NewDocuments.ingestBatch(control, cfg, fetcher, converter, runTs, conf)
+      (updateReport, newReport)
+    } finally control.unpersist()
 
     // ---- report (O4/K3): one JSON array, deterministic order --------
     val results = (updateReport ++ newReport).sortBy(r => (r.ingest_type, r.document_id))

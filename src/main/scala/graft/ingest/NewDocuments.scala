@@ -2,11 +2,16 @@ package graft.ingest
 
 import java.security.MessageDigest
 import java.time.Instant
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, Semaphore}
+
+import scala.collection.mutable
 
 import graft.functions.{ContentTypes, FileNames, Slugify}
 import graft.model.{Mappings, Schemas}
 import graft.model.Schemas.BackendDocument
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.Dataset
 
 /** New-document pipeline (SURVEY.md §2 P1–P5, C1–C9, K1–K2, §3.2).
   *
@@ -16,8 +21,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * error value (reference `main.py:209-227` semantics: the job never dies
   * on a row). The stage is deliberately OUTSIDE Catalyst's expression
   * space so the optimizer can never reorder or re-evaluate the effects
-  * (SURVEY.md §4.1); callers must materialize (persist/count) before
-  * reusing the result.
+  * (SURVEY.md §4.1); its parser-input writes happen in the same pass, so
+  * the result is consumed by exactly one action.
   *
   * The pure pieces (slugify C9, content sniffing C1, byte-aware filename
   * C8) are the unit-tested functions from `graft.functions`, shared with
@@ -56,7 +61,7 @@ object NewDocuments {
       fetcher: Fetcher,
       converter: Converter,
       runTs: Instant,
-      conf: org.apache.hadoop.conf.Configuration): Processed = {
+      conf: Configuration): Processed = {
     try {
       // O6: structured per-document logging (reference
       // new_document_actions.py:74,84,102)
@@ -137,10 +142,23 @@ object NewDocuments {
     }
   }
 
-  /** The distributed stage: one fetcher/converter per partition. */
+  /** Documents each task keeps in flight. Fetches and storage writes of
+    * up to `InFlight` documents overlap; conversions still run one at a
+    * time per task, so a task keeps to the one core Spark schedules it
+    * on. Each in-flight document holds its fetched body and converted
+    * PDF, so a task holds at most `InFlight` bodies in memory.
+    */
+  val InFlight = 8
+
+  /** The distributed stage: one fetcher/converter per partition. Each
+    * document is fetched, converted and stored by [[processOne]], then,
+    * if it succeeded, its parser input is written (K2) — the reference's
+    * per-future write (`main.py:216-220`). Rows come out in input order.
+    */
   def process(
       newDocs: Dataset[BackendDocument],
       documentRoot: String,
+      parserInputLocation: String,
       fetcher: Fetcher,
       converter: Converter,
       runTs: Instant,
@@ -149,17 +167,22 @@ object NewDocuments {
     import spark.implicits._
     newDocs.mapPartitions { docs =>
       val c = conf.value
-      docs.map(doc =>
-        processOne(doc, documentRoot, fetcher, converter, runTs, c))
+      val oneConversion = new OneConversionAtATime(converter)
+      pipelined(docs, InFlight) { doc =>
+        val p = processOne(doc, documentRoot, fetcher, oneConversion, runTs, c)
+        if (p.error.isEmpty) writeParserInput(p, parserInputLocation, c)
+        p
+      }
     }
   }
 
   /** Phase-2 pipeline over a control DataFrame, shared by the batch job
-    * and the streaming foreachBatch: explode → repartition (the control
-    * file is ONE json file → one input partition; without this every
-    * fetch runs serially in a single task — the shuffle moves only
-    * document metadata) → effectful fetch stage → materialize once →
-    * parser-input sink. Returns the per-document outcomes.
+    * and the streaming foreachBatch, as ONE Spark action: explode →
+    * repartition (the control file is ONE json file → one input
+    * partition; without this every fetch runs serially in a single task
+    * — the shuffle moves only document metadata) → effectful fetch stage
+    * with its parser-input writes → the report rows. Returns the
+    * per-document outcomes.
     */
   def ingestBatch(
       control: org.apache.spark.sql.DataFrame,
@@ -172,42 +195,73 @@ object NewDocuments {
     import spark.implicits._
     val newDocs = ControlFile.newDocuments(control).as[BackendDocument]
       .repartition(spark.sparkContext.defaultParallelism)
-    val processed = process(
-      newDocs, cfg.documentRoot, fetcher, converter, runTs, conf)
-    processed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    processed.count()
-    writeParserInputs(processed,
-      s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}", conf)
     // scale-safe report: project to the three report fields BEFORE the
     // driver collect — the full Processed row (whole BackendDocument
     // struct) never leaves the executors; at 10^8 docs the driver holds
     // ~3 short strings per row, not the document metadata
-    val out = processed
+    process(newDocs, cfg.documentRoot,
+      s"${cfg.pipelineRoot}/${cfg.parserInputPrefix}", fetcher, converter,
+      runTs, conf)
       .map(p => Schemas.IngestResult(p.doc.import_id, "new", p.error))
       .collect().toSeq
-    processed.unpersist()
-    out
   }
 
-  /** K2 sink: one pretty-printed JSON per document at
+  /** K2: one pretty-printed JSON per document at
     * `{outputLocation}/{document_id}.json`, exact field order
-    * (reference `api_client.py:180-193`). Only non-errored rows are
-    * written (reference `main.py:216-220` writes on success only).
+    * (reference `api_client.py:180-193`). A write that still fails after
+    * its retries fails the task, as it fails the reference's run.
     */
-  def writeParserInputs(
-      processed: Dataset[Processed],
-      outputLocation: String,
-      conf: SerializableConf): Unit =
-    processed.filter((p: Processed) => p.error.isEmpty).foreachPartition {
-      (rows: Iterator[Processed]) =>
-        val c = conf.value
-        rows.foreach { p =>
-          val text = ParserInputJson.render(
-            p.doc, p.cdn_object, p.content_type, p.md5_sum)
-          Fetcher.withRetry(4) {
-            Storage.writeString(
-              s"$outputLocation/${p.doc.import_id}.json", text, c)
-          }
-        }
+  private def writeParserInput(
+      p: Processed, outputLocation: String, conf: Configuration): Unit = {
+    val text = ParserInputJson.render(
+      p.doc, p.cdn_object, p.content_type, p.md5_sum)
+    Fetcher.withRetry(4) {
+      Storage.writeString(s"$outputLocation/${p.doc.import_id}.json", text, conf)
     }
+  }
+
+  /** `f` over `in` with up to `width` calls in flight on a pool the
+    * current task owns (shut down when the task completes). Only the
+    * calling thread pulls from `in`; results come out in input order, and
+    * a call's exception is rethrown when its result is reached.
+    */
+  private def pipelined[A, B](in: Iterator[A], width: Int)(f: A => B): Iterator[B] = {
+    val pool = Executors.newFixedThreadPool(width, { (r: Runnable) =>
+      val t = new Thread(r, "new-documents-io")
+      t.setDaemon(true)
+      t
+    })
+    TaskContext.get().addTaskCompletionListener[Unit](_ => pool.shutdownNow())
+    val inFlight = mutable.Queue[Future[B]]()
+    def fill(): Unit =
+      while (inFlight.size < width && in.hasNext) {
+        val a = in.next()
+        inFlight.enqueue(pool.submit(new Callable[B] { def call(): B = f(a) }))
+      }
+    new Iterator[B] {
+      override def hasNext: Boolean = { fill(); inFlight.nonEmpty }
+      override def next(): B = {
+        if (!hasNext) throw new NoSuchElementException
+        try inFlight.dequeue().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    }
+  }
+
+  /** Lets one conversion of the task run at a time, whichever in-flight
+    * document asks for it.
+    */
+  private final class OneConversionAtATime(inner: Converter) extends Converter {
+    private val gate = new Semaphore(1)
+    private def gated[T](body: => T): T = {
+      gate.acquire()
+      try body finally gate.release()
+    }
+    override def docToPdf(content: Array[Byte]): Array[Byte] =
+      gated(inner.docToPdf(content))
+    override def capturePdfFromUrl(url: String): (Array[Byte], Option[String]) =
+      gated(inner.capturePdfFromUrl(url))
+    override def addLastPageWatermark(pdf: Array[Byte], text: String): Array[Byte] =
+      gated(inner.addLastPageWatermark(pdf, text))
+  }
 }
